@@ -13,8 +13,10 @@ Execution shape for every spatial query (SURVEY.md §3 "Spark lifecycle"):
    kernel (SplineCell analog) or ``np.searchsorted`` (BinarySearchYCell
    analog, include/partition_cells/BinarySearchY.hpp) — batched NumPy,
    never per-row Python;
-5. final ``groupBy(query_id)`` aggregation + left join against the query
-   list so empty results surface as 0 (matches the oracle SQL).
+5. final ``groupBy(query_id)`` aggregation over the probe partials
+   unioned with the query list, which carries each query's base count
+   (or 0), so empty results surface as 0 (matches the oracle SQL) with
+   one exchange and no join.
 
 Cell-granular shortcuts mirrored from the reference (SURVEY.md §4):
 fully-outside / fully-contained cells short-circuit before any per-point
@@ -35,8 +37,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from . import queryplan as qp
+from .operators import probes
 from .operators import spline as spl
 from .operators.partitioning import (
     AdaptiveGridPartitioner,
@@ -70,9 +73,6 @@ def effective_partition_size(n: int, partition_size: int, max_cells: int) -> int
     if max_cells and n > partition_size * max_cells:
         return -(-n // max_cells)
     return partition_size
-
-
-from .operators.probes import widen_ulps as _widen  # shared routing margin
 
 
 @dataclass
@@ -218,42 +218,53 @@ class SpatialEngine:
             return pts.select(F.xxhash64("url").alias("pid"), "x", "y")
         return points_src.points_df(self.spark, self.sf_dir)
 
-    def assigned_points(self) -> DataFrame:
-        """points + cell_id.  JVM expression for closed-form schemes; Arrow
-        pandas UDF routing otherwise; STR is two window ranks (pure JVM)."""
-        if self._assigned is not None:
-            return self._assigned
+    def assignment(self) -> DataFrame:
+        """points + cell_id, as a plan.  JVM expression for closed-form
+        schemes; Arrow pandas UDF routing otherwise; STR is two window
+        ranks (pure JVM)."""
         df = self.points()
         p = self.partitioner
         if isinstance(p, (FixedGridPartitioner, MortonPartitioner)):
             expr = p.assign_sql("x", "y") if isinstance(p, MortonPartitioner) else p.assign_sql("x")
-            out = df.withColumn("cell_id", F.expr(expr))
-        elif isinstance(p, STRPartitioner):
+            return df.withColumn("cell_id", F.expr(expr))
+        if isinstance(p, STRPartitioner):
             # two chained rankings with NO unpartitioned window: the global
             # (x, y, pid) rank is bucketed two-phase (operators/ranking.py)
             # so no single task ever sees the full row set
             from .operators.ranking import str_cell_ids
             cells_per_slice = math.ceil(p.slice_cap / p.leaf)
-            out = str_cell_ids(df, "pid", p.slice_cap, p.leaf, cells_per_slice)
-        else:
-            spec = p.to_spec()
+            return str_cell_ids(df, "pid", p.slice_cap, p.leaf, cells_per_slice)
+        spec = p.to_spec()
 
-            def route(it):
-                part = Partitioner.from_spec(spec)
-                for pdf in it:
-                    pdf = pdf.copy()
-                    pdf["cell_id"] = part.assign_np(pdf["x"].to_numpy(), pdf["y"].to_numpy())
-                    yield pdf
+        def route(it):
+            part = Partitioner.from_spec(spec)
+            for pdf in it:
+                pdf = pdf.copy()
+                pdf["cell_id"] = part.assign_np(pdf["x"].to_numpy(), pdf["y"].to_numpy())
+                yield pdf
 
-            out = df.mapInPandas(route, schema="pid bigint, x double, y double, cell_id bigint")
-        # hash-partition by cell_id once: every probe job (groupBy(cell_id)
-        # .applyInPandas) reuses this partitioning with a sort only — no
-        # per-query re-shuffle (verified in the physical plan); this is also
-        # the Iceberg/parquet partition key at materialization time
-        n_shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        out = out.repartition(n_shuffle, "cell_id")
-        self._assigned = out
-        return out
+        return df.mapInPandas(route, schema="pid bigint, x double, y double, cell_id bigint")
+
+    def assigned_points(self) -> DataFrame:
+        """:meth:`assignment`, hash-partitioned by cell_id and persisted.
+
+        Every probe job (groupBy(cell_id).applyInPandas) reuses this
+        partitioning with a sort only — no per-query re-shuffle (verified
+        in the physical plan); cell_id is also the Iceberg/parquet
+        partition key at materialization time.  The first action (the
+        stats job at build) fills the persisted table, and every later
+        query reads it instead of re-scanning the source, re-parsing and
+        re-shuffling; the points stay consistent with the stats and
+        models, which are build-time snapshots too.  A local checkpoint
+        cuts the source lineage under it, so query plans (and their SQL
+        metrics) show a scan of checkpointed rows rather than the source
+        scan of the build; those rows live in the executors' block
+        managers, like the persisted table."""
+        if self._assigned is None:
+            n_shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
+            self._assigned = (self.assignment().localCheckpoint(eager=False)
+                              .repartition(n_shuffle, "cell_id").persist())
+        return self._assigned
 
     def cell_stats(self) -> CellStats:
         """Per-cell MBR + count (one aggregation job; the model/stats table
@@ -333,8 +344,8 @@ class SpatialEngine:
                     # instead.  BroadcastHashJoin preserves the probe
                     # side's cached hash-partitioning on cell_id, so the
                     # downstream applyInPandas still runs exchange-free.
-                    cdf = self.spark.createDataFrame(
-                        pd.DataFrame({"cell_id": np.asarray(cells, dtype=np.int64)}))
+                    cdf = qp.local_frame(self.spark, {"cell_id": np.asarray(cells, dtype=np.int64)},
+                                         "cell_id bigint")
                     df = df.join(F.broadcast(cdf), "cell_id", "left_semi")
         return df, keys
 
@@ -383,131 +394,43 @@ class SpatialEngine:
 
     # -------------------------------------------------- candidate pruning ---
 
-    def _cell_query_map(self, rects: list[tuple]) -> dict[int, list[int]]:
-        """cell_id -> query indices touching it (driver-side LookUp routing,
-        SURVEY.md §2.3).  STR needs cell MBRs -> one stats job."""
+    def _candidates(self, rects_arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Flat (cell, query index) candidate pairs of an (N, 4) rectangle
+        batch (driver-side LookUp routing, SURVEY.md §2.3).  STR routes by
+        cell MBRs, which the stats job fills."""
         if isinstance(self.partitioner, STRPartitioner):
             self.cell_stats()
-        m: dict[int, list[int]] = {}
-        for qi, (qid, fx, fy, tx, ty) in enumerate(rects):
-            for c in self.partitioner.cells_for_rect(fx, fy, tx, ty):
-                m.setdefault(int(c), []).append(qi)
-        return m
+        return qp.candidates(self.partitioner, rects_arr)
 
-    @staticmethod
-    def _rects_np(rects: list[tuple]) -> tuple[np.ndarray, np.ndarray]:
-        """One-time conversion of a rectangle batch to its (N, 4) float64
-        corner array + int64 query-id array.  Built ONCE per job and
-        threaded through routing/probe: at an 18k-rect production batch
-        each redundant list-comprehension conversion is serial driver
-        time on exactly the path the vectorized routing exists for."""
-        arr = np.asarray([[r[1], r[2], r[3], r[4]] for r in rects],
-                         dtype=np.float64).reshape(len(rects), 4)
-        qids = np.asarray([r[0] for r in rects], dtype=np.int64)
-        return arr, qids
+    def _probe(self, probe, schema: str, cells: np.ndarray) -> DataFrame:
+        """Run a ``queryplan`` probe once per candidate cell group (one
+        Python stage; the cached cell partitioning means no exchange).  A
+        cell with no routed query yields an empty typed frame."""
+        empty = pd.DataFrame({c.split()[0]: pd.Series(
+            dtype="int64" if c.split()[1] == "bigint" else "float64")
+            for c in schema.split(", ")})
 
-    def _rect_candidates_flat(self, rects: list[tuple],
-                              rects_arr: np.ndarray | None = None,
-                              ) -> tuple[np.ndarray, np.ndarray]:
-        """Flat (cell, query_idx) candidate pairs for a rectangle batch —
-        the vectorized form of the `_cell_query_map` loop.  Fixed grid
-        routes the whole batch in closed-form array arithmetic (no
-        per-query Python: the scalar loop measured ~1.9s of SERIAL
-        driver time per job at 18k rectangles — a fixed term that capped
-        the range workload's measured N->4N scaling at 0.61 before this
-        round-5 fix); tree schemes keep the per-query kernel and flatten
-        its outputs."""
-        from .operators import probes
-        p = self.partitioner
-        if isinstance(p, STRPartitioner):
-            self.cell_stats()
-        if isinstance(p, FixedGridPartitioner):
-            arr = rects_arr if rects_arr is not None else self._rects_np(rects)[0]
-            lo, hi = p.rect_cell_ranges(arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3])
-            return probes.flatten_ranges(lo, hi)
-        return probes.flatten_cell_lists(
-            [p.cells_for_rect(r[1], r[2], r[3], r[4]) for r in rects])
+        def run(key, pdf):
+            out = probe(int(key[0]), pdf)
+            return empty if out is None else out
+
+        gdf, keys = self._probe_groups(cells)
+        return gdf.groupBy(*keys).applyInPandas(run, schema=schema)
 
     # ---------------------------------------------------------- range Qs ---
 
-    def _range_probe(self, rects: list[tuple], materialize: bool,
-                     routing: tuple | None = None,
-                     rects_np: tuple[np.ndarray, np.ndarray] | None = None,
-                     ) -> DataFrame:
-        refine = self.refine
+    def _range_probe(self, qids: np.ndarray, q: np.ndarray, routing: tuple,
+                     materialize: bool) -> DataFrame:
         # pre-fit knots index the FULL cell's sorted order — unusable for
         # salted sub-groups, so fall back to in-probe fit when salting;
         # shipped as a broadcast, not a closure capture (O(#cells) payload)
         models_bc = self._models_broadcast() if not self.salt_rows else None
-        from .operators import probes
-        q, qids = rects_np if rects_np is not None else self._rects_np(rects)
-        if routing is None:
-            routing = probes.compact_routing(*self._rect_candidates_flat(rects, q))
-        # columnar routing table rides a BROADCAST, not the task closure: a
-        # production batch's (cell, query) pairs are MBs — as closure state
-        # they would be re-pickled into the plan per job and re-unpickled
-        # per task (measured 0.3s/task at 18k rects); as int64 arrays in a
-        # broadcast they ship once and load once per worker
-        routing_bc = self.spark.sparkContext.broadcast(routing)
-        if materialize:
-            schema = "query_id bigint, pid bigint, x double, y double"
-        else:
-            schema = "query_id bigint, cnt bigint"
-
-        def probe(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            cell = int(key[0])
-            qidx = probes.routing_lookup(routing_bc.value, cell)
-            empty = pd.DataFrame({c.split()[0]: pd.Series(dtype="int64" if "bigint" in c else "float64")
-                                  for c in schema.split(", ")})
-            if qidx is None or qidx.size == 0:
-                return empty
-            swap_x = refine == "binsearch_x"
-            if swap_x:
-                # C3 BinarySearchXCell (BinarySearchX.hpp:8-51): (x, y)
-                # sort, binary search on x, filter candidates on y — the
-                # dimension-swapped twin; result rows are identical.
-                order, xs, ys = probes.sort_cell_x(pdf["x"].to_numpy(), pdf["y"].to_numpy())
-            else:
-                order, xs, ys = probes.sort_cell(pdf["x"].to_numpy(), pdf["y"].to_numpy())
-            pids = pdf["pid"].to_numpy()[order]
-            n = xs.shape[0]
-            qi = np.asarray(qidx, dtype=np.int64)
-            fx, fy, tx, ty = q[qi, 0], q[qi, 1], q[qi, 2], q[qi, 3]
-            knots = None
-            if refine == "learned" and n > spl.LINEAR_SCAN_THRESHOLD:
-                pre = models_bc.value.get(cell) if models_bc is not None else None
-                if pre is not None:
-                    knots = pre
-                else:
-                    keys, pos = spl.build_cdf(ys)
-                    knots = spl.fit_spline(keys, pos.astype(np.float64))
-            if materialize:
-                contained = probes.contained_mask(xs, ys, fx, fy, tx, ty)
-                if swap_x:
-                    lo, hi = probes.range_bounds(xs, fx, tx, None)
-                else:
-                    lo, hi = probes.range_bounds(ys, fy, ty, knots)
-                frames = []
-                for j in range(qi.shape[0]):
-                    if swap_x:
-                        sel = probes.range_select_cell_x(xs, ys, fx, fy, tx, ty, j, lo, hi, contained)
-                    else:
-                        sel = probes.range_select_cell(xs, ys, fx, fy, tx, ty, j, lo, hi, contained)
-                    if sel.size:
-                        frames.append(pd.DataFrame({
-                            "query_id": np.full(sel.size, qids[qi[j]], dtype=np.int64),
-                            "pid": pids[sel], "x": xs[sel], "y": ys[sel],
-                        }))
-                return pd.concat(frames) if frames else empty
-            if swap_x:
-                cnt = probes.range_count_cell_x(xs, ys, fx, fy, tx, ty)
-            else:
-                cnt = probes.range_count_cell(xs, ys, fx, fy, tx, ty, knots)
-            return pd.DataFrame({"query_id": qids[qi], "cnt": cnt})
-
-        gdf, keys = self._probe_groups(routing[0])
-        parts = gdf.groupBy(*keys).applyInPandas(probe, schema=schema)
-        return parts
+        probe = qp.range_probe(self.spark.sparkContext.broadcast((routing, q, qids)),
+                               "pid" if materialize else None,
+                               refine=self.refine, models_bc=models_bc)
+        schema = ("query_id bigint, pid bigint, x double, y double" if materialize
+                  else "query_id bigint, cnt bigint")
+        return self._probe(probe, schema, routing[0])
 
     def range_count(self, rects: list[tuple]) -> DataFrame:
         """Q2 range count (src/main.cpp:134-191): (query_id, cnt) with 0 for
@@ -519,54 +442,37 @@ class SpatialEngine:
         the O(#cells) stats table with no data touched; only boundary
         cells enter the distributed probe.  For broad rectangles this
         removes most of the scan (a whole-domain query probes nothing)."""
-        from .operators import probes
         s = self.cell_stats()  # also fills STR MBRs for cells_for_rect
-        rects_arr, qids = self._rects_np(rects)
-        cells_flat, qidx_flat = self._rect_candidates_flat(rects, rects_arr)
+        qids, q = qp.rects_np(rects)
         base, boundary = probes.route_contained(
-            rects_arr, cells_flat, qidx_flat,
-            s.ids, s.minx, s.miny, s.maxx, s.maxy, s.count)
-        parts = self._range_probe(rects, materialize=False, routing=boundary,
-                                  rects_np=(rects_arr, qids))
-        agg = parts.groupBy("query_id").agg(F.sum("cnt").alias("cnt"))
-        # Arrow-path local frame (a Python row list re-pickles per job and
-        # costs ~0.5s at 18k queries)
-        qdf = self.spark.createDataFrame(pd.DataFrame(
-            {"query_id": qids, "base": base}))
-        return (
-            qdf.join(agg, "query_id", "left")
-            .select("query_id",
-                    (F.coalesce(F.col("cnt"), F.lit(0)) + F.col("base"))
-                    .cast("bigint").alias("cnt"))
-        )
+            q, *self._candidates(q), s.ids, s.minx, s.miny, s.maxx, s.maxy, s.count)
+        parts = self._range_probe(qids, q, boundary, materialize=False)
+        return qp.sum_by(self.spark, "query_id", qids, base, parts)
 
     def range_materialize(self, rects: list[tuple]) -> DataFrame:
         """Q1 range materialize (src/main.cpp:101-132): all (query_id, pid,
         x, y) hits; order unspecified (validation sorts, src/main.cpp:200)."""
-        return self._range_probe(rects, materialize=True)
+        qids, q = qp.rects_np(rects)
+        routing = probes.compact_routing(*self._candidates(q))
+        return self._range_probe(qids, q, routing, materialize=True)
 
     # ------------------------------------------------------- point lookup ---
 
     def point_lookup(self, pts: list[tuple]) -> DataFrame:
         """Q3 point lookup (src/main.cpp:416-450), canonical fetch-one =
-        min(pid) among exact matches; misses -> pid = -1."""
-        p = self.partitioner
-        if isinstance(p, STRPartitioner):
-            self.cell_stats()
-        qrows = []
-        for (qid, qx, qy) in pts:
-            for c in p.cells_for_rect(qx, qy, qx, qy):
-                qrows.append((qid, float(qx), float(qy), int(c)))
-        qdf = self.spark.createDataFrame(qrows, "query_id bigint, qx double, qy double, cell_id bigint")
-        pts_df = self.assigned_points()
-        hit = (
-            pts_df.join(F.broadcast(qdf), "cell_id")
-            .where((F.col("x") == F.col("qx")) & (F.col("y") == F.col("qy")))
-            .groupBy("query_id").agg(F.min("pid").alias("pid"))
-        )
-        alldf = self.spark.createDataFrame([(q[0],) for q in pts], "query_id bigint")
-        return alldf.join(hit, "query_id", "left").select(
-            "query_id", F.coalesce(F.col("pid"), F.lit(-1)).cast("bigint").alias("pid"))
+        min(pid) among exact matches; misses -> pid = -1.  Entirely JVM:
+        a broadcast equality join of the cached cell table against the
+        (query, candidate cell) frame."""
+        qids, q = qp.points_np(pts)
+        cells, qi = self._candidates(q)
+        qdf = qp.local_frame(
+            self.spark, {"query_id": qids[qi], "qx": q[qi, 0], "qy": q[qi, 1],
+                         "cell_id": cells},
+            "query_id bigint, qx double, qy double, cell_id bigint")
+        hits = (self.assigned_points().join(F.broadcast(qdf), "cell_id")
+                .where((F.col("x") == F.col("qx")) & (F.col("y") == F.col("qy")))
+                .select("query_id", "pid"))
+        return qp.min_by(self.spark, qids, hits, "pid", "bigint", miss=-1)
 
     # ----------------------------------------------------------- distance ---
 
@@ -585,62 +491,14 @@ class SpatialEngine:
         return self._distance_probe(circles, materialize=True)
 
     def _distance_probe(self, circles: list[tuple], materialize: bool) -> DataFrame:
-        from .functions import geo
-        qids = [c[0] for c in circles]
-        latr = np.asarray([(c[1] / 180.0) * math.pi for c in circles])
-        lonr = np.asarray([(c[2] / 180.0) * math.pi for c in circles])
-        rad = np.asarray([c[3] for c in circles])
-        mnla, mxla, mnlo, mxlo = geo.circle_bbox_radians_np(latr, lonr, rad)
-        r2d = 180.0 / math.pi
-        rects = []
-        for i, qid in enumerate(qids):
-            fx, tx = _widen(mnla[i] * r2d, mxla[i] * r2d)
-            fy, ty = _widen(mnlo[i] * r2d, mxlo[i] * r2d)
-            rects.append((qid, fx, fy, tx, ty))
-        cellmap = self._cell_query_map(rects)
-        qlat = np.asarray([c[1] for c in circles])
-        qlon = np.asarray([c[2] for c in circles])
-        qrad = rad
-        qid_arr = np.asarray(qids, dtype=np.int64)
-
-        schema = ("query_id bigint, pid bigint" if materialize
-                  else "query_id bigint, cnt bigint")
-
-        from .operators import probes
-
-        def probe(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            cell = int(key[0])
-            qidx = cellmap.get(cell)
-            if not qidx:
-                return pd.DataFrame({
-                    "query_id": pd.Series(dtype="int64"),
-                    ("pid" if materialize else "cnt"): pd.Series(dtype="int64")})
-            xs = pdf["x"].to_numpy()
-            ys = pdf["y"].to_numpy()
-            qi = np.asarray(qidx, dtype=np.int64)
-            if materialize:
-                pids = pdf["pid"].to_numpy()
-                out_q, out_p = [], []
-                for t in qi:
-                    hit = pids[probes.distance_mask_cell(xs, ys, qlat[t], qlon[t], qrad[t])]
-                    out_q.append(np.full(hit.shape[0], qid_arr[t], dtype=np.int64))
-                    out_p.append(hit)
-                return pd.DataFrame({"query_id": np.concatenate(out_q),
-                                     "pid": np.concatenate(out_p)})
-            cnt = np.empty(qi.shape[0], dtype=np.int64)
-            for j, t in enumerate(qi):
-                cnt[j] = np.count_nonzero(
-                    probes.distance_mask_cell(xs, ys, qlat[t], qlon[t], qrad[t]))
-            return pd.DataFrame({"query_id": qid_arr[qi], "cnt": cnt})
-
-        gdf, keys = self._probe_groups(cellmap)
-        parts = gdf.groupBy(*keys).applyInPandas(probe, schema=schema)
+        qids, rects, lat, lon, rad = qp.circle_rects(circles)
+        routing = probes.compact_routing(*self._candidates(rects))
+        bc = self.spark.sparkContext.broadcast((routing, qids, lat, lon, rad))
         if materialize:
-            return parts
-        agg = parts.groupBy("query_id").agg(F.sum("cnt").alias("cnt"))
-        qdf = self.spark.createDataFrame([(q,) for q in qids], "query_id bigint")
-        return qdf.join(agg, "query_id", "left").select(
-            "query_id", F.coalesce(F.col("cnt"), F.lit(0)).cast("bigint").alias("cnt"))
+            return self._probe(qp.distance_probe(bc, "pid"), "query_id bigint, pid bigint",
+                               routing[0])
+        parts = self._probe(qp.distance_probe(bc), "query_id bigint, cnt bigint", routing[0])
+        return qp.sum_by(self.spark, "query_id", qids, np.zeros(qids.size), parts)
 
     # ----------------------------------------------------------- PIP join ---
 
@@ -650,58 +508,14 @@ class SpatialEngine:
         Polygons broadcast; candidate cells from each polygon's bbox; refine
         = exact reference ray cast (include/queries/join.h:30-37),
         engine-side kernel (operators/probes.py)."""
-        from .operators.probes import ray_cast_inside
-        polymap: dict[int, list[int]] = {}
-        if isinstance(self.partitioner, STRPartitioner):
-            self.cell_stats()
-        for gid, (vx, vy) in polygons.items():
-            bb = (min(vx), min(vy), max(vx), max(vy))
-            for c in self.partitioner.cells_for_rect(*bb):
-                polymap.setdefault(int(c), []).append(gid)
-        polys = {gid: (np.asarray(vx), np.asarray(vy)) for gid, (vx, vy) in polygons.items()}
-        schema = "polygon_id bigint, pid bigint" if pairs else "polygon_id bigint, cnt bigint"
-
-        def probe(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            cell = int(key[0])
-            gids = polymap.get(cell)
-            if not gids:
-                if pairs:
-                    return pd.DataFrame({"polygon_id": pd.Series(dtype="int64"), "pid": pd.Series(dtype="int64")})
-                return pd.DataFrame({"polygon_id": pd.Series(dtype="int64"), "cnt": pd.Series(dtype="int64")})
-            px = pdf["x"].to_numpy()
-            py = pdf["y"].to_numpy()
-            pids = pdf["pid"].to_numpy()
-            out_g, out_v = [], []
-            from .operators import probes
-            for gid in gids:
-                vx, vy = polys[gid]
-                # filter stage (the reference's LookUp(polygon.box),
-                # src/main.cpp:473): bbox mask before the ray-cast refine —
-                # points outside the bbox are never inside, so this is
-                # result-identical and cuts the N x E work ~10-20x
-                cand = np.flatnonzero(probes.pip_candidates(px, py, vx, vy))
-                inside = np.zeros(px.shape[0], dtype=bool)
-                if cand.size:
-                    inside[cand] = ray_cast_inside(px[cand], py[cand], vx, vy)
-                if pairs:
-                    hit = pids[inside]
-                    out_g.extend([gid] * hit.shape[0])
-                    out_v.extend(hit.tolist())
-                else:
-                    out_g.append(gid)
-                    out_v.append(int(inside.sum()))
-            col = "pid" if pairs else "cnt"
-            return pd.DataFrame({"polygon_id": np.asarray(out_g, dtype=np.int64),
-                                 col: np.asarray(out_v, dtype=np.int64)})
-
-        gdf, keys = self._probe_groups(polymap)
-        parts = gdf.groupBy(*keys).applyInPandas(probe, schema=schema)
+        gids, rects, polys = qp.polygon_rects(polygons)
+        routing = probes.compact_routing(*self._candidates(rects))
+        bc = self.spark.sparkContext.broadcast((routing, gids, polys))
         if pairs:
-            return parts
-        agg = parts.groupBy("polygon_id").agg(F.sum("cnt").alias("cnt"))
-        gdf = self.spark.createDataFrame([(g,) for g in polygons], "polygon_id bigint")
-        return gdf.join(agg, "polygon_id", "left").select(
-            "polygon_id", F.coalesce(F.col("cnt"), F.lit(0)).cast("bigint").alias("cnt"))
+            return self._probe(qp.pip_probe(bc, "pid"), "polygon_id bigint, pid bigint",
+                               routing[0])
+        parts = self._probe(qp.pip_probe(bc), "polygon_id bigint, cnt bigint", routing[0])
+        return qp.sum_by(self.spark, "polygon_id", gids, np.zeros(gids.size), parts)
 
     # ---------------------------------------------------------------- kNN ---
 
@@ -712,48 +526,18 @@ class SpatialEngine:
         k, bound R = max bbox-max-d2 of that prefix, probe all cells with
         min-d2 <= R — exact, and at scale only O(k/cell_size) cells probe.
         Local per-cell top-k inside the probe; global top-k via window."""
-        from .operators import probes
         s = self.cell_stats()
-        cellmap = probes.knn_candidate_cells(
-            s.ids, s.minx, s.miny, s.maxx, s.maxy, s.count, queries)
-        qarr = np.asarray([[q[1], q[2], q[3]] for q in queries], dtype=np.float64)
-        qid_arr = np.asarray([q[0] for q in queries], dtype=np.int64)
-
-        def probe(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            cell = int(key[0])
-            qidx = cellmap.get(cell)
-            empty = pd.DataFrame({"query_id": pd.Series(dtype="int64"), "pid": pd.Series(dtype="int64"),
-                                  "d2": pd.Series(dtype="float64"), "px": pd.Series(dtype="float64"),
-                                  "py": pd.Series(dtype="float64")})
-            if not qidx:
-                return empty
-            from .operators import probes
-            xs = pdf["x"].to_numpy(); ys = pdf["y"].to_numpy(); pids = pdf["pid"].to_numpy()
-            qi = np.asarray(qidx, dtype=np.int64)
-            frames = []
-            for t in qi:
-                sel, d2 = probes.knn_local_topk(xs, ys, pids, qarr[t, 0], qarr[t, 1], qarr[t, 2])
-                frames.append(pd.DataFrame({
-                    "query_id": np.full(sel.shape[0], qid_arr[t], dtype=np.int64),
-                    "pid": pids[sel], "d2": d2[sel], "px": xs[sel], "py": ys[sel]}))
-            return pd.concat(frames) if frames else empty
-
-        gdf, keys = self._probe_groups(cellmap)
-        parts = gdf.groupBy(*keys).applyInPandas(
-            probe, schema="query_id bigint, pid bigint, d2 double, px double, py double")
-        # global top-k: per-query merge of the per-cell partial top-ks via
-        # one applyInPandas (numpy lexsort over <= #groups x k rows) — a
-        # window row_number here would sort the full partial set through one
-        # shuffle-sort; the merge is the associative reduce the partials
-        # were designed for
-        kmap = {int(q[0]): int(q[3]) for q in queries}
-
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            qid = int(key[0])
-            return probes.knn_merge_topk(pdf, qid, kmap.get(qid, 0))
-
-        return parts.groupBy("query_id").applyInPandas(
-            merge, schema="query_id bigint, rnk bigint, pid bigint")
+        routing = probes.compact_routing(*probes.knn_candidate_cells(
+            s.ids, s.minx, s.miny, s.maxx, s.maxy, s.count, queries))
+        qids, q = qp.knn_np(queries)
+        parts = self._probe(
+            qp.knn_probe(self.spark.sparkContext.broadcast((routing, qids, q)), "pid"),
+            "query_id bigint, pid bigint, d2 double, px double, py double, k bigint",
+            routing[0])
+        # global top-k: row_number over each query's partials.  The window
+        # needs the same query_id exchange + sort a per-query merge pays,
+        # and keeps the merge in the JVM: no second Python stage
+        return qp.knn_rank(parts, "pid")
 
     # ----------------------------------------------------- tile assignment ---
 
@@ -765,10 +549,7 @@ class SpatialEngine:
 
     def polygon_tiles(self, polygons: dict[int, tuple[list[float], list[float]]]) -> DataFrame:
         """polygon -> candidate tile set (the Q5 filter mapping as data)."""
-        if isinstance(self.partitioner, STRPartitioner):
-            self.cell_stats()
-        rows = []
-        for gid, (vx, vy) in polygons.items():
-            for c in self.partitioner.cells_for_rect(min(vx), min(vy), max(vx), max(vy)):
-                rows.append((gid, int(c)))
-        return self.spark.createDataFrame(rows, "polygon_id bigint, cell_id bigint")
+        gids, rects, _ = qp.polygon_rects(polygons)
+        cells, qi = self._candidates(rects)
+        return qp.local_frame(self.spark, {"polygon_id": gids[qi], "cell_id": cells},
+                              "polygon_id bigint, cell_id bigint")

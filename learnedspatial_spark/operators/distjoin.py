@@ -302,6 +302,11 @@ def distance_join_pairs(
     Self-join dedup: the blocked candidates meet each (l, r) exactly
     once; ``l.pid < r.pid`` then keeps one orientation of the two
     symmetric meetings.
+
+    Precondition: ``id_col`` is unique.  Two points sharing an id never
+    pair with each other (``l_pid < r_pid`` is false for them), and their
+    pairs with a third point come out as duplicate rows.  The DuckDB twin
+    has the same semantics.
     """
     base = _normalize(points, id_col, lat_col, lon_col)
     cand = _blocked_candidates(base, base, radius_m).where(
@@ -341,6 +346,10 @@ def knn_join(
     and the window partition count per key is bounded by the points
     within the radius — data density, not corpus-frequency skew.  Ties
     break on (dist_m, r_pid), deterministic on both engines.
+
+    Precondition: ``id_col`` is unique on each side.  The window
+    partitions by ``l_pid`` alone, so left points sharing an id share one
+    top-k list (the DuckDB twin does the same).
     """
     l = _normalize(left, id_col, lat_col, lon_col)
     r = _normalize(right, id_col, lat_col, lon_col)

@@ -162,27 +162,6 @@ def route_contained(rects_arr: np.ndarray, cells_flat: np.ndarray,
     return base, compact_routing(cf[~contained], qf[~contained])
 
 
-def split_contained_counts(rects, cells_per_query, ids, minx, miny, maxx, maxy, count):
-    """O3 shortcut applied at ROUTING, vectorized over each query's
-    candidate-cell array: cells whose data bbox lies fully inside query
-    qi accumulate their cached counts into ``base[qi]`` (never scanned);
-    only the boundary (cell, query) pairs still need a probe.  A broad
-    rectangle at a deep grid level has up to O(#cells) candidates — the
-    contained/uncontained split runs as numpy masks so the driver never
-    pays a per-cell Python loop for them, and the boundary dict it does
-    build is O(perimeter) for such rects.  Candidate ids with no stats
-    row (no data) are dropped.  Shared by the in-session and tiled
-    engines so the two paths cannot drift."""
-    rects_arr = np.asarray([[r[1], r[2], r[3], r[4]] for r in rects],
-                           dtype=np.float64).reshape(len(rects), 4)
-    cells_flat, qidx_flat = flatten_cell_lists(cells_per_query)
-    base, (cells_u, offsets, qs) = route_contained(
-        rects_arr, cells_flat, qidx_flat, ids, minx, miny, maxx, maxy, count)
-    boundary = {int(c): qs[offsets[i]:offsets[i + 1]].tolist()
-                for i, c in enumerate(cells_u)}
-    return base, boundary
-
-
 def range_count_cell(xs_sorted, ys_sorted, fx, fy, tx, ty,
                      knots=None) -> np.ndarray:
     """Q2 per-query hit counts in one cell (arrays over queries)."""
@@ -296,14 +275,17 @@ def stab_edges(edges: np.ndarray, y: float) -> np.ndarray:
     return e["id"][(e["low"] <= y) & (y <= e["high"])]
 
 
-def knn_candidate_cells(ids, minx, miny, maxx, maxy, count, queries) -> dict:
+def knn_candidate_cells(ids, minx, miny, maxx, maxy, count, queries):
     """Driver-side kNN cell pruning shared by BOTH engines (so the two
     paths cannot drift): per query take cells ascending by bbox-min-d2
     until their counts cover k, bound R = max bbox-max-d2 of that prefix,
     and route the query to every cell with min-d2 <= R — exact by
-    construction.  Returns {cell_id: [query_index, ...]}."""
-    cellmap: dict[int, list[int]] = {}
+    construction; a query with k < 1 routes nowhere.  Returns flat
+    (cell_id, query_index) pairs, the input of :func:`compact_routing`."""
+    cells, qidx = [], []
     for qi, (qid, qx, qy, k) in enumerate(queries):
+        if k < 1:
+            continue
         dx = np.maximum(np.maximum(minx - qx, qx - maxx), 0.0)
         dy = np.maximum(np.maximum(miny - qy, qy - maxy), 0.0)
         dmin = dx * dx + dy * dy
@@ -314,40 +296,29 @@ def knn_candidate_cells(ids, minx, miny, maxx, maxy, count, queries) -> dict:
         cum = np.cumsum(count[order])
         need = min(int(np.searchsorted(cum, k)) + 1, order.shape[0])
         R = float(dmax[order[:need]].max())
-        for c in ids[dmin <= R]:
-            cellmap.setdefault(int(c), []).append(qi)
-    return cellmap
+        cells.append(np.asarray(ids[dmin <= R], dtype=np.int64))
+        qidx.append(np.full(cells[-1].shape[0], qi, dtype=np.int64))
+    if not cells:
+        return (np.empty(0, dtype=np.int64),) * 2
+    return np.concatenate(cells), np.concatenate(qidx)
 
 
-def knn_merge_topk(pdf, qid: int, k: int, id_col: str = "pid"):
-    """Per-query merge of the per-cell top-k partials (the associative
-    reduce both engines apply in their final applyInPandas): global order
-    (d2, x, y, id), first k rows -> (query_id, rnk, id)."""
-    import pandas as pd
-    order = np.lexsort((pdf[id_col].to_numpy(), pdf["py"].to_numpy(),
-                        pdf["px"].to_numpy(), pdf["d2"].to_numpy()))[:k]
-    return pd.DataFrame({
-        "query_id": np.full(order.shape[0], qid, dtype=np.int64),
-        "rnk": np.arange(1, order.shape[0] + 1, dtype=np.int64),
-        id_col: pdf[id_col].to_numpy()[order]})
-
-
-def widen_ulps(lo: float, hi: float, ulps: int = 8) -> tuple[float, float]:
-    """Widen a [lo, hi] routing bound by ``ulps`` float steps on each side
-    — the conservative margin BOTH engines must apply to the Matuschek
-    circle bbox before cell routing (the bbox math amplifies rounding
-    near the poles well past 1 ulp; an under-widened bound can prune a
-    cell holding a true inclusive-boundary hit)."""
+def widen_ulps(lo, hi, ulps: int = 8):
+    """Widen [lo, hi] routing bounds (scalars or arrays) by ``ulps`` float
+    steps on each side — the conservative margin BOTH engines must apply
+    to the Matuschek circle bbox before cell routing (the bbox math
+    amplifies rounding near the poles well past 1 ulp; an under-widened
+    bound can prune a cell holding a true inclusive-boundary hit)."""
     for _ in range(ulps):
-        lo = float(np.nextafter(lo, -np.inf))
-        hi = float(np.nextafter(hi, np.inf))
+        lo = np.nextafter(lo, -np.inf)
+        hi = np.nextafter(hi, np.inf)
     return lo, hi
 
 
-def knn_local_topk(xs, ys, pids, qx, qy, k) -> np.ndarray:
-    """Per-cell exact top-k candidate indices with the engine's total order
-    (d2, x, y, pid); ties at the k-th distance widened before the lexsort
-    so the global merge stays exact."""
+def knn_local_topk(xs, ys, pids, qx, qy, k) -> tuple[np.ndarray, np.ndarray]:
+    """Per-cell exact top-k with the engine's total order (d2, x, y, pid)
+    -> (selected indices, d2 of every point); ties at the k-th distance
+    widened before the lexsort so the global rank stays exact."""
     k_i = min(int(k), xs.shape[0])
     d2 = (xs - qx) ** 2 + (ys - qy) ** 2
     if k_i < xs.shape[0]:
@@ -357,3 +328,47 @@ def knn_local_topk(xs, ys, pids, qx, qy, k) -> np.ndarray:
         kth = np.inf
     cand = np.flatnonzero(d2 <= kth)
     return cand[np.lexsort((pids[cand], ys[cand], xs[cand], d2[cand]))][:k_i], d2
+
+
+# ----------------------------------------------- per-cell query slices ---
+# One call per cell and routed query slice; each returns flat
+# (query position in the slice, point index) pairs, so an engine emits ONE
+# frame per cell whatever the number of queries.  Counts are
+# ``np.bincount(pos, minlength=len(slice))``.
+
+def flat_hits(hits: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    if not hits:
+        return (np.empty(0, dtype=np.int64),) * 2
+    pos = np.repeat(np.arange(len(hits), dtype=np.int64), [h.shape[0] for h in hits])
+    return pos, np.concatenate(hits).astype(np.int64)
+
+
+def distance_select_cell(xs, ys, qlat, qlon, qrad):
+    """Q4 refine of a circle slice over one cell."""
+    return flat_hits([np.flatnonzero(distance_mask_cell(xs, ys, a, o, r))
+                       for a, o, r in zip(qlat, qlon, qrad)])
+
+
+def pip_select_cell(px, py, polys):
+    """Q5 filter (polygon bbox) + exact ray-cast refine of a polygon slice
+    [(vx, vy), ...] over one cell.  The bbox mask is result-identical and
+    cuts the points x edges work ~10-20x."""
+    hits = []
+    for vx, vy in polys:
+        cand = np.flatnonzero(pip_candidates(px, py, vx, vy))
+        if cand.size:
+            cand = cand[ray_cast_inside(px[cand], py[cand], vx, vy)]
+        hits.append(cand)
+    return flat_hits(hits)
+
+
+def knn_select_cell(xs, ys, ids, q):
+    """Per-cell top-k of a kNN slice ``q`` (rows qx, qy, k) -> (query
+    position, point index, d2) of every partial row."""
+    sel, d2 = [], []
+    for qx, qy, k in q:
+        s, d = knn_local_topk(xs, ys, ids, qx, qy, k)
+        sel.append(s)
+        d2.append(d[s])
+    pos, idx = flat_hits(sel)
+    return pos, idx, (np.concatenate(d2) if d2 else np.empty(0))

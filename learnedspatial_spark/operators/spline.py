@@ -16,9 +16,10 @@ to run inside ``applyInPandas`` over one grid cell at a time:
 * probe: interpolate the spline to an estimated position
   (Spline.hpp:385-453) then repair to the exact bound.  The reference
   repairs with unbounded linear over/under-shot scans
-  (Spline.hpp:476-520); we repair with an exponentially expanding window +
-  ``np.searchsorted`` — identical results, bounded worst case, and
-  vectorized across a whole query batch.
+  (Spline.hpp:476-520); we repair with a lock-step vectorized bisection
+  of an eps-sized window around the estimate, widening the window 4x for
+  the rare query whose bound lands on its edge — identical results,
+  bounded worst case, and vectorized across a whole query batch.
 
 A radix hint table (Spline.hpp:349-383) only accelerates spline-segment
 location; ``np.searchsorted`` over the knot keys is result-identical

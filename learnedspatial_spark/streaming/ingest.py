@@ -25,8 +25,12 @@ from ..operators.partitioning import (
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 # geo:{lat},{lon} extraction — same pattern the batch extractor embeds
-# (datagen.HTML_TEMPLATE); regexp shared between batch and stream.
-GEO_RE = r"geo:(-?[0-9]+(?:\.[0-9eE+-]+)?),(-?[0-9]+(?:\.[0-9eE+-]+)?)"
+# (datagen.HTML_TEMPLATE); regexp shared between batch and stream (and the
+# DuckDB splitter build).  Each group is a decimal with an optional
+# exponent: datagen writes coordinates with repr(), which gives both
+# "-1e-06" (no decimal point) and "9e-06".
+_NUM = r"-?[0-9]+(?:\.[0-9]*)?(?:[eE][+-]?[0-9]+)?"
+GEO_RE = rf"geo:({_NUM}),({_NUM})"
 
 
 def extract_points_stream(pages: DataFrame) -> DataFrame:

@@ -31,12 +31,11 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import queryplan as qp
 from .operators import probes
-from .operators import spline as spl
 from .operators.partitioning import Partitioner
 from .ops import storage
 
@@ -46,6 +45,10 @@ class TiledSpatialEngine:
         self.spark = spark
         self.root = index_root
         self.tiled_path = os.path.join(index_root, "points_tiled")
+        # opened once: the file listing (a Spark job past 32 cell
+        # directories) is paid at open, not per query, and every query
+        # reads the same snapshot as the stats and models loaded with it
+        self.table = storage.read_table(spark, self.tiled_path)
         manifest_path = os.path.join(index_root, "_ckpt", "fit_models.manifest.json")
         with open(manifest_path) as f:
             spec = json.load(f)["partitioner_spec"]
@@ -75,7 +78,7 @@ class TiledSpatialEngine:
         arbitrary extra column (weight, ts, ...) would corrupt join keys
         downstream."""
         if getattr(self, "_id_col", None) is None:
-            fields = storage.read_table(self.spark, self.tiled_path).schema.fields
+            fields = self.table.schema.fields
             named = [f for f in fields if f.name in self._ID_CANDIDATES]
             others = [f for f in fields if f.name not in ("x", "y", "cell_id")]
             if len(named) == 1:
@@ -103,9 +106,8 @@ class TiledSpatialEngine:
 
     def _pruned_scan(self, cells: list[int]) -> DataFrame:
         # isin on the partition column -> PartitionFilters in the scan node:
-        # non-candidate cell directories are never listed or opened
-        return (storage.read_table(self.spark, self.tiled_path)
-                .where(F.col("cell_id").isin([int(c) for c in cells])))
+        # non-candidate cell files are never opened
+        return self.table.where(F.col("cell_id").isin([int(c) for c in cells]))
 
     def _cell_stats_np(self):
         """Memoized O(#cells) stats arrays from the persisted stats table
@@ -124,6 +126,30 @@ class TiledSpatialEngine:
             }
         return self._stats_np
 
+    def _probe(self, probe, schema: str, cells: np.ndarray) -> DataFrame:
+        """Run a ``queryplan`` probe per cell over the pruned scan of
+        ``cells`` (one Python stage, no shuffle of point data).  A batch
+        belongs to one cell's files, but after split coalescing a task may
+        interleave cells: group defensively."""
+        def run(it):
+            for pdf in it:
+                for cell, grp in pdf.groupby("cell_id", sort=False):
+                    out = probe(int(cell), grp)
+                    if out is not None and len(out):
+                        yield out
+        return self._pruned_scan(cells).mapInPandas(run, schema=schema)
+
+    def _range_probe(self, qids, q, routing, refine: str, materialize: bool) -> DataFrame:
+        models_bc = self._models() if refine == "learned" else None
+        bc = self.spark.sparkContext.broadcast((routing, q, qids))
+        if not materialize:
+            return self._probe(qp.range_probe(bc, None, refine, models_bc),
+                               "query_id bigint, cnt bigint", routing[0])
+        id_col, id_type = self._id_column()
+        return self._probe(qp.range_probe(bc, id_col, refine, models_bc),
+                           f"query_id bigint, {id_col} {id_type}, x double, y double",
+                           routing[0])
+
     def range_count(self, rects: list[tuple], refine: str = "learned") -> DataFrame:
         """(query_id, cnt) with 0 for empty queries — same semantics as
         SpatialEngine.range_count, shuffle-free probe.  Fully-contained
@@ -131,43 +157,26 @@ class TiledSpatialEngine:
         contribute their persisted stats counts without being scanned —
         the partition pruning then skips interior cell directories
         entirely; only boundary cells are read."""
-        cells_per_query = [self.partitioner.cells_for_rect(r[1], r[2], r[3], r[4])
-                           for r in rects]
         s = self._cell_stats_np()
-        base, cellmap = probes.split_contained_counts(
-            rects, cells_per_query, s["ids"], s["minx"], s["miny"], s["maxx"],
-            s["maxy"], s["count"])
-        q = np.asarray([[r[1], r[2], r[3], r[4]] for r in rects], dtype=np.float64)
-        qids = np.asarray([r[0] for r in rects], dtype=np.int64)
-        models_bc = self._models() if refine == "learned" else None
+        qids, q = qp.rects_np(rects)
+        base, boundary = probes.route_contained(
+            q, *qp.candidates(self.partitioner, q), s["ids"], s["minx"], s["miny"],
+            s["maxx"], s["maxy"], s["count"])
+        parts = self._range_probe(qids, q, boundary, refine, materialize=False)
+        return qp.sum_by(self.spark, "query_id", qids, base, parts)
 
-        def probe(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                # a batch belongs to one cell's files, but after split
-                # coalescing a task may interleave cells: group defensively
-                for cell, grp in pdf.groupby("cell_id", sort=False):
-                    qidx = cellmap.get(int(cell))
-                    if not qidx:
-                        continue
-                    _, xs, ys = probes.sort_cell(grp["x"].to_numpy(), grp["y"].to_numpy())
-                    qi = np.asarray(qidx, dtype=np.int64)
-                    knots = models_bc.value.get(int(cell)) if models_bc is not None else None
-                    cnt = probes.range_count_cell(
-                        xs, ys, q[qi, 0], q[qi, 1], q[qi, 2], q[qi, 3], knots)
-                    yield pd.DataFrame({"query_id": qids[qi], "cnt": cnt})
-
-        parts = self._pruned_scan(list(cellmap)).mapInPandas(
-            probe, schema="query_id bigint, cnt bigint")
-        agg = parts.groupBy("query_id").agg(F.sum("cnt").alias("cnt"))
-        qdf = self.spark.createDataFrame(
-            [(r[0], int(base[i])) for i, r in enumerate(rects)],
-            "query_id bigint, base bigint")
-        return (qdf.join(agg, "query_id", "left")
-                .select("query_id",
-                        (F.coalesce(F.col("cnt"), F.lit(0)) + F.col("base"))
-                        .cast("bigint").alias("cnt")))
+    def range_materialize(self, rects: list[tuple], refine: str = "learned") -> DataFrame:
+        """(query_id, <id>, x, y) hit rows — the id column keeps its
+        RESOLVED name (pid for derived-point indexes, url for page
+        indexes), matching SpatialEngine.range_materialize's naming on the
+        same data — shuffle-free (no aggregation at all: the output IS the
+        probe output).  ``refine`` selects the
+        in-cell candidate-run search: the broadcast learned models
+        (SplineCell analog) or plain binary search — result-identical, same
+        shared ``probes.range_bounds`` path as range_count."""
+        qids, q = qp.rects_np(rects)
+        routing = probes.compact_routing(*qp.candidates(self.partitioner, q))
+        return self._range_probe(qids, q, routing, refine, materialize=True)
 
     def point_lookup(self, pts: list[tuple]) -> DataFrame:
         """Q3 fetch-one over the materialized index — entirely JVM: pruned
@@ -175,26 +184,20 @@ class TiledSpatialEngine:
         resolved id column (pid for derived-point indexes, url for
         page-built ones).  Output (query_id, <id>); misses are -1 for a
         numeric pid, NULL otherwise."""
-        qrows = []
-        cells = set()
-        for (qid, qx, qy) in pts:
-            for c in self.partitioner.cells_for_rect(qx, qy, qx, qy):
-                qrows.append((qid, float(qx), float(qy), int(c)))
-                cells.add(int(c))
-        qdf = self.spark.createDataFrame(
-            qrows, "query_id bigint, qx double, qy double, cell_id bigint")
+        qids, q = qp.points_np(pts)
+        cells, qi = qp.candidates(self.partitioner, q)
+        qdf = qp.local_frame(
+            self.spark, {"query_id": qids[qi], "qx": q[qi, 0], "qy": q[qi, 1],
+                         "cell_id": cells},
+            "query_id bigint, qx double, qy double, cell_id bigint")
         id_col, id_type = self._id_column()
-        hit = (self._pruned_scan(sorted(cells))
-               .join(F.broadcast(qdf), "cell_id")
-               .where((F.col("x") == F.col("qx")) & (F.col("y") == F.col("qy")))
-               .groupBy("query_id").agg(F.min(id_col).alias(id_col)))
-        alldf = self.spark.createDataFrame([(q[0],) for q in pts], "query_id bigint")
-        out = alldf.join(hit, "query_id", "left")
+        hits = (self._pruned_scan(np.unique(cells))
+                .join(F.broadcast(qdf), "cell_id")
+                .where((F.col("x") == F.col("qx")) & (F.col("y") == F.col("qy")))
+                .select("query_id", id_col))
         if id_col == "pid":
-            return out.select(
-                "query_id",
-                F.coalesce(F.col("pid"), F.lit(-1)).cast("bigint").alias("pid"))
-        return out.select("query_id", F.col(id_col).cast(id_type).alias(id_col))
+            return qp.min_by(self.spark, qids, hits, "pid", "bigint", miss=-1)
+        return qp.min_by(self.spark, qids, hits, id_col, id_type)
 
     def distance_count(self, circles: list[tuple]) -> DataFrame:
         """Q4 radius count over the materialized index: Matuschek bbox ->
@@ -208,65 +211,16 @@ class TiledSpatialEngine:
         return self._distance(circles, materialize=True)
 
     def _distance(self, circles: list[tuple], materialize: bool) -> DataFrame:
-        import math as _math
-
-        from .functions import geo
-        qids = [c[0] for c in circles]
-        latr = np.asarray([(c[1] / 180.0) * _math.pi for c in circles])
-        lonr = np.asarray([(c[2] / 180.0) * _math.pi for c in circles])
-        rad = np.asarray([c[3] for c in circles])
-        mnla, mxla, mnlo, mxlo = geo.circle_bbox_radians_np(latr, lonr, rad)
-        r2d = 180.0 / _math.pi
-        cellmap: dict[int, list[int]] = {}
-        for i in range(len(circles)):
-            # same 8-ulp conservative margin as SpatialEngine._distance_probe
-            # (the bbox math amplifies rounding past 1 ulp near the poles;
-            # an under-widened bound can prune a cell holding a true hit)
-            fx, tx = probes.widen_ulps(mnla[i] * r2d, mxla[i] * r2d)
-            fy, ty = probes.widen_ulps(mnlo[i] * r2d, mxlo[i] * r2d)
-            for c in self.partitioner.cells_for_rect(fx, fy, tx, ty):
-                cellmap.setdefault(int(c), []).append(i)
-        qlat = np.asarray([c[1] for c in circles])
-        qlon = np.asarray([c[2] for c in circles])
-        qid_arr = np.asarray(qids, dtype=np.int64)
-
-        id_col, id_type = self._id_column()
-
-        def probe(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                for cell, grp in pdf.groupby("cell_id", sort=False):
-                    qidx = cellmap.get(int(cell))
-                    if not qidx:
-                        continue
-                    xs = grp["x"].to_numpy()
-                    ys = grp["y"].to_numpy()
-                    qi = np.asarray(qidx, dtype=np.int64)
-                    if materialize:
-                        pids = grp[id_col].to_numpy()
-                        for t in qi:
-                            hit = pids[probes.distance_mask_cell(xs, ys, qlat[t], qlon[t], rad[t])]
-                            if hit.size:
-                                yield pd.DataFrame({
-                                    "query_id": np.full(hit.size, qid_arr[t], dtype=np.int64),
-                                    id_col: hit})
-                        continue
-                    cnt = np.empty(qi.shape[0], dtype=np.int64)
-                    for j, t in enumerate(qi):
-                        cnt[j] = np.count_nonzero(
-                            probes.distance_mask_cell(xs, ys, qlat[t], qlon[t], rad[t]))
-                    yield pd.DataFrame({"query_id": qid_arr[qi], "cnt": cnt})
-
+        qids, rects, lat, lon, rad = qp.circle_rects(circles)
+        routing = probes.compact_routing(*qp.candidates(self.partitioner, rects))
+        bc = self.spark.sparkContext.broadcast((routing, qids, lat, lon, rad))
         if materialize:
-            return self._pruned_scan(list(cellmap)).mapInPandas(
-                probe, schema=f"query_id bigint, {id_col} {id_type}")
-        parts = self._pruned_scan(list(cellmap)).mapInPandas(
-            probe, schema="query_id bigint, cnt bigint")
-        agg = parts.groupBy("query_id").agg(F.sum("cnt").alias("cnt"))
-        qdf = self.spark.createDataFrame([(q,) for q in qids], "query_id bigint")
-        return qdf.join(agg, "query_id", "left").select(
-            "query_id", F.coalesce(F.col("cnt"), F.lit(0)).cast("bigint").alias("cnt"))
+            id_col, id_type = self._id_column()
+            return self._probe(qp.distance_probe(bc, id_col),
+                               f"query_id bigint, {id_col} {id_type}", routing[0])
+        parts = self._probe(qp.distance_probe(bc), "query_id bigint, cnt bigint",
+                            routing[0])
+        return qp.sum_by(self.spark, "query_id", qids, np.zeros(qids.size), parts)
 
     def pip(self, polygons: dict[int, tuple[list[float], list[float]]],
             pairs: bool = False) -> DataFrame:
@@ -274,138 +228,29 @@ class TiledSpatialEngine:
         candidate cells -> pruned scan -> exact ray cast in place.  Counts
         by default; ``pairs`` yields the (polygon_id, pid) containment rows
         shuffle-free."""
-        from .operators.probes import ray_cast_inside
-        polymap: dict[int, list[int]] = {}
-        for gid, (vx, vy) in polygons.items():
-            bb = (min(vx), min(vy), max(vx), max(vy))
-            for c in self.partitioner.cells_for_rect(*bb):
-                polymap.setdefault(int(c), []).append(gid)
-        polys = {gid: (np.asarray(vx), np.asarray(vy)) for gid, (vx, vy) in polygons.items()}
-
-        id_col, id_type = self._id_column()
-
-        def probe(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                for cell, grp in pdf.groupby("cell_id", sort=False):
-                    gids = polymap.get(int(cell))
-                    if not gids:
-                        continue
-                    px = grp["x"].to_numpy()
-                    py = grp["y"].to_numpy()
-                    pids = grp[id_col].to_numpy() if pairs else None
-                    out_g, out_c = [], []
-                    for gid in gids:
-                        vx, vy = polys[gid]
-                        cand = np.flatnonzero(probes.pip_candidates(px, py, vx, vy))
-                        inside = np.zeros(px.shape[0], dtype=bool)
-                        if cand.size:
-                            inside[cand] = ray_cast_inside(px[cand], py[cand], vx, vy)
-                        if pairs:
-                            hit = pids[inside]
-                            if hit.size:
-                                yield pd.DataFrame({
-                                    "polygon_id": np.full(hit.size, gid, dtype=np.int64),
-                                    id_col: hit})
-                        else:
-                            out_g.append(gid)
-                            out_c.append(int(inside.sum()))
-                    if not pairs and out_g:
-                        yield pd.DataFrame({"polygon_id": np.asarray(out_g, dtype=np.int64),
-                                            "cnt": np.asarray(out_c, dtype=np.int64)})
-
+        gids, rects, polys = qp.polygon_rects(polygons)
+        routing = probes.compact_routing(*qp.candidates(self.partitioner, rects))
+        bc = self.spark.sparkContext.broadcast((routing, gids, polys))
         if pairs:
-            return self._pruned_scan(list(polymap)).mapInPandas(
-                probe, schema=f"polygon_id bigint, {id_col} {id_type}")
-        parts = self._pruned_scan(list(polymap)).mapInPandas(
-            probe, schema="polygon_id bigint, cnt bigint")
-        agg = parts.groupBy("polygon_id").agg(F.sum("cnt").alias("cnt"))
-        gdf = self.spark.createDataFrame([(g,) for g in polygons], "polygon_id bigint")
-        return gdf.join(agg, "polygon_id", "left").select(
-            "polygon_id", F.coalesce(F.col("cnt"), F.lit(0)).cast("bigint").alias("cnt"))
+            id_col, id_type = self._id_column()
+            return self._probe(qp.pip_probe(bc, id_col),
+                               f"polygon_id bigint, {id_col} {id_type}", routing[0])
+        parts = self._probe(qp.pip_probe(bc), "polygon_id bigint, cnt bigint",
+                            routing[0])
+        return qp.sum_by(self.spark, "polygon_id", gids, np.zeros(gids.size), parts)
 
     def knn(self, queries: list[tuple]) -> DataFrame:
         """kNN over the materialized index: cell stats from the persisted
         stats table drive the same exact pruning as SpatialEngine.knn; the
         per-cell top-k partials come from the pruned scan, the per-query
-        merge is the one small shuffle."""
+        window rank is the one small shuffle."""
         s = self._cell_stats_np()
-        # shared pruning kernel (operators/probes.py) — identical to
-        # SpatialEngine.knn by construction
-        cellmap = probes.knn_candidate_cells(
-            s["ids"], s["minx"], s["miny"], s["maxx"], s["maxy"], s["count"], queries)
-        qarr = np.asarray([[q[1], q[2], q[3]] for q in queries], dtype=np.float64)
-        qid_arr = np.asarray([q[0] for q in queries], dtype=np.int64)
+        routing = probes.compact_routing(*probes.knn_candidate_cells(
+            s["ids"], s["minx"], s["miny"], s["maxx"], s["maxy"], s["count"], queries))
+        qids, q = qp.knn_np(queries)
         id_col, id_type = self._id_column()
-
-        def probe(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                for cell, grp in pdf.groupby("cell_id", sort=False):
-                    qidx = cellmap.get(int(cell))
-                    if not qidx:
-                        continue
-                    xs = grp["x"].to_numpy(); ys = grp["y"].to_numpy()
-                    pids = grp[id_col].to_numpy()
-                    for t in np.asarray(qidx, dtype=np.int64):
-                        sel, d2 = probes.knn_local_topk(
-                            xs, ys, pids, qarr[t, 0], qarr[t, 1], qarr[t, 2])
-                        yield pd.DataFrame({
-                            "query_id": np.full(sel.shape[0], qid_arr[t], dtype=np.int64),
-                            id_col: pids[sel], "d2": d2[sel], "px": xs[sel], "py": ys[sel]})
-
-        parts = self._pruned_scan(list(cellmap)).mapInPandas(
-            probe, schema=f"query_id bigint, {id_col} {id_type}, d2 double, px double, py double")
-        kmap = {int(q[0]): int(q[3]) for q in queries}
-
-        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            qid = int(key[0])
-            return probes.knn_merge_topk(pdf, qid, kmap.get(qid, 0), id_col)
-
-        return parts.groupBy("query_id").applyInPandas(
-            merge, schema=f"query_id bigint, rnk bigint, {id_col} {id_type}")
-
-    def range_materialize(self, rects: list[tuple], refine: str = "learned") -> DataFrame:
-        """(query_id, <id>, x, y) hit rows — the id column keeps its
-        RESOLVED name (pid for derived-point indexes, url for page
-        indexes), matching SpatialEngine.range_materialize's naming on the
-        same data — shuffle-free (no aggregation at all: the output IS the
-        probe output).  ``refine`` selects the
-        in-cell candidate-run search: the broadcast learned models
-        (SplineCell analog) or plain binary search — result-identical, same
-        shared ``probes.range_bounds`` path as range_count."""
-        cellmap: dict[int, list[int]] = {}
-        for qi, (qid, fx, fy, tx, ty) in enumerate(rects):
-            for c in self.partitioner.cells_for_rect(fx, fy, tx, ty):
-                cellmap.setdefault(int(c), []).append(qi)
-        q = np.asarray([[r[1], r[2], r[3], r[4]] for r in rects], dtype=np.float64)
-        qids = np.asarray([r[0] for r in rects], dtype=np.int64)
-        models_bc = self._models() if refine == "learned" else None
-        id_col, id_type = self._id_column()
-
-        def probe(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                for cell, grp in pdf.groupby("cell_id", sort=False):
-                    qidx = cellmap.get(int(cell))
-                    if not qidx:
-                        continue
-                    order, xs, ys = probes.sort_cell(grp["x"].to_numpy(), grp["y"].to_numpy())
-                    urls = grp[id_col].to_numpy()[order]
-                    qi = np.asarray(qidx, dtype=np.int64)
-                    fx, fy, tx, ty = q[qi, 0], q[qi, 1], q[qi, 2], q[qi, 3]
-                    knots = models_bc.value.get(int(cell)) if models_bc is not None else None
-                    contained = probes.contained_mask(xs, ys, fx, fy, tx, ty)
-                    lo, hi = probes.range_bounds(ys, fy, ty, knots)
-                    for j in range(qi.shape[0]):
-                        sel = probes.range_select_cell(xs, ys, fx, fy, tx, ty, j, lo, hi, contained)
-                        if sel.size:
-                            yield pd.DataFrame({
-                                "query_id": np.full(sel.size, qids[qi[j]], dtype=np.int64),
-                                id_col: urls[sel], "x": xs[sel], "y": ys[sel]})
-
-        return self._pruned_scan(list(cellmap)).mapInPandas(
-            probe, schema=f"query_id bigint, {id_col} {id_type}, x double, y double")
+        parts = self._probe(
+            qp.knn_probe(self.spark.sparkContext.broadcast((routing, qids, q)), id_col),
+            f"query_id bigint, {id_col} {id_type}, d2 double, px double, py double, k bigint",
+            routing[0])
+        return qp.knn_rank(parts, id_col)
